@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.util.LocalSession
 import scala.jdk.CollectionConverters._
 
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
@@ -120,24 +120,9 @@ object Bench {
   /** Single-JVM measurement path (also the per-shard child body). */
   private def runInProcess(names: Seq[String],
       sfDir: String): Seq[(String, Double)] = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // optional runtime-conf overrides (same contract as graft.Verify):
-    // SPARK_GRAFT_SPARK_CONF="k=v,k=v" — forces alternate physical
-    // paths (e.g. the distributed components fallback) under the same
-    // timing harness; forked shard children inherit the env var
-    sys.env.get("SPARK_GRAFT_SPARK_CONF").foreach(_.split(',')
-      .map(_.trim).filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k, v)
-      })
+    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    // forked shard children inherit SPARK_GRAFT_SPARK_CONF
+    LocalSession.applyConfOverrides(spark)
     // absorb one-off JVM/codegen/scan-init cost so per-query numbers
     // reflect steady state rather than whichever query runs first. The
     // warmup query is a FIXED name (an unordered Map's headOption would

@@ -1,15 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.lit
+
+import graft.util.LocalSession
 
 /** Minimal consumer demo of the typed API: enrichment → Dataset[VideoStats]
   * → typed top-k. Run: `sbt "runMain graft.Demo"`. */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = LocalSession.builder(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

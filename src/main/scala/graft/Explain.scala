@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.util.LocalSession
 
 /** Plan-inspection utility: dumps the formatted physical plan of selected
   * queries so scan pushdown, join strategies, and codegen spans can be
@@ -12,14 +12,7 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq
       else queries.Registry.all.map(_.name)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(4, logLevel = "ERROR")
     names.foreach { n =>
       println(s"\n########## $n ##########")
       try println(queries.Registry.byName(n).fn(spark, sfDir)

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.util.LocalSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,27 +9,12 @@ object Verify {
     // Default to the machine's real core count (capped at 32, the bench
     // posture): an env-less driver run at local[4] projected to ~an hour
     // for the full surface and timed out (round-12 t2 came back empty).
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(Runtime.getRuntime.availableProcessors, 32).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts is parquet timestamp[ns] — read as long, converted in
-      // graft.util.Tables.events (matches DuckDB's truncating read).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // optional runtime-conf overrides (e.g. SPARK_GRAFT_SPARK_CONF=
-    // "spark.graft.dedup.unionFindMaxEdges=0") — lets the scale probes
-    // force alternate physical paths (the distributed components
-    // fallback) through the SAME correctness gate, no code edits
-    sys.env.get("SPARK_GRAFT_SPARK_CONF").foreach(_.split(',')
-      .map(_.trim).filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k, v)
-      })
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(math.min(Runtime.getRuntime.availableProcessors, 32))
+    val spark = LocalSession(cpus)
+    // e.g. SPARK_GRAFT_SPARK_CONF="spark.graft.dedup.unionFindMaxEdges=0"
+    // runs the distributed components fallback through this same gate
+    LocalSession.applyConfOverrides(spark)
     new java.io.File(outDir).mkdirs()
     // optional comma-separated name-prefix filter for focused local runs
     // (e.g. SPARK_GRAFT_VERIFY_FILTER=q82,q89); unset (the driver) = all

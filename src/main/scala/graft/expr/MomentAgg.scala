@@ -8,6 +8,8 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggreg
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
+import graft.util.Exact.dec12
+
 /** Second-moment accumulator state: the UPPER TRIANGLE (j ≤ k) of
   * Σᵢ t12(vᵢⱼ·vᵢₖ) as exact scale-12 decimals, each cell held as an
   * unscaled long with a lazy BigInteger spill on overflow (the same
@@ -68,7 +70,9 @@ final class MomentBuf {
 /** One-pass second-moment matrix aggregate over `array<double>` rows:
   * Mⱼₖ = Σᵢ t12(vᵢⱼ·vᵢₖ) with t12 the engine's
   * `round(x, 12)::decimal(28,12)` discipline, evaluated through the
-  * EXACT same BigDecimal calls Spark's Round + Cast execute — the
+  * EXACT same BigDecimal calls Spark's Round + Cast execute
+  * ([[graft.util.Exact.dec12]]; a NaN or infinite product is a null
+  * term, skipped like any null in `sum`) — the
   * decimal sums are order-independent, so the result is bit-identical
   * to the former posexplode×posexplode fan-out + `sum(t12(p))` while
   * materializing ZERO intermediate rows (the fan-out pushed n·d² rows
@@ -102,18 +106,6 @@ case class MomentMatrix(child: Expression,
 
   override def createAggregationBuffer(): MomentBuf = new MomentBuf
 
-  /** t12 of a product, as a scale-12 unscaled value. The two-step
-    * BigDecimal walk is Spark's own Round(p, 12) (valueOf → setScale
-    * HALF_UP → double) followed by Cast(double → decimal(28,12))
-    * (valueOf of the ROUNDED double → setScale) — see
-    * Similarity.t12Local, which pins the same trajectory. */
-  @inline private def termUnscaled(p: Double): java.math.BigDecimal = {
-    val r = java.math.BigDecimal.valueOf(p)
-      .setScale(12, java.math.RoundingMode.HALF_UP).doubleValue()
-    java.math.BigDecimal.valueOf(r)
-      .setScale(12, java.math.RoundingMode.HALF_UP)
-  }
-
   override def update(b: MomentBuf, input: InternalRow): MomentBuf = {
     val e = child.eval(input)
     if (e == null) return b
@@ -135,8 +127,9 @@ case class MomentMatrix(child: Expression,
         val y = vals(k)
         var j = 0
         while (j <= k) {
-          if (!nulls(j)) {
-            val bd = termUnscaled(vals(j) * y)
+          // a non-finite product casts to a null term, which sum skips
+          val bd = if (nulls(j)) null else dec12(vals(j) * y)
+          if (bd != null) {
             val bits = bd.unscaledValue().bitLength()
             if (bits < 63) b.addUnscaled(base + j, bd.unscaledValue().longValue())
             else b.addBig(base + j, bd.unscaledValue())

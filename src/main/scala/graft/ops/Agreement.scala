@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.Exact.t12
+
 /** Round-12 inter-rater agreement / association batch: Fleiss' kappa,
   * Krippendorff's alpha (nominal), Kendall's W concordance, the
   * bias-corrected Cramér's V, and quadratic-weighted Cohen's kappa.
@@ -21,7 +23,6 @@ import org.apache.spark.sql.functions._
 object Agreement {
 
   private def d38(c: Column) = c.cast("decimal(38,0)")
-  private def t12(c: Column) = round(c, 12).cast("decimal(28,12)")
 
   /** Fleiss' kappa for `m` raters per item over nominal categories.
     * `ratings` holds one row per (item, rater) with the assigned

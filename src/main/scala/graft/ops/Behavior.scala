@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Exact.t12
+
 /** User-behavior analytics over event streams: ordered funnels, retention
   * cohorts, event-transition matrices, rolling distinct reach. The
   * reference stores raw per-video rows and leaves analysis to SQL
@@ -187,8 +189,8 @@ object Behavior {
       .where(col("_tus") < col("_cus") &&
         col("_cus") - col("_tus") <= lookbackUs)
       .withColumn("_wr",
-        round(exp((col("_tus") - col("_cus")).cast("double")
-          / lit(tauUs.toDouble)), 12).cast("decimal(28,12)"))
+        t12(exp((col("_tus") - col("_cus")).cast("double")
+          / lit(tauUs.toDouble))))
     val perConv = Window.partitionBy(col("_ent"), col("_cid"))
     joined
       .withColumn("_sw", sum(col("_wr")).over(perConv))
@@ -196,7 +198,7 @@ object Behavior {
         / col("_sw").cast("double"))
       .groupBy(col("channel"))
       .agg(count(lit(1)).as("n_touches"),
-        sum(round(col("_credit"), 12).cast("decimal(28,12)"))
+        sum(t12(col("_credit")))
           .as("_c"))
       .select(col("channel"), col("n_touches"),
         round(col("_c").cast("double"), 6).as("credit_r"))
@@ -288,8 +290,7 @@ object Behavior {
       col("to_type"), col("p").as("_pb"))
     a.join(b, "_mid")
       .groupBy(col("from_type"), col("to_type"))
-      .agg(sum(round(col("_pa") * col("_pb"), 12)
-        .cast("decimal(28,12)")).as("_p2"))
+      .agg(sum(t12(col("_pa") * col("_pb"))).as("_p2"))
       .select(col("from_type"), col("to_type"),
         round(col("_p2").cast("double"), 6).as("p2_r"))
   }
@@ -339,14 +340,14 @@ object Behavior {
     val p = col("n").cast("double") / col("_rt")
     val perFrom = rows.groupBy(col("from_type"))
       .agg(max(col("_rt")).as("n_trans"), count(lit(1)).as("n_next"),
-        sum(round(-p * log(p), 12).cast("decimal(28,12)")).as("_h"))
+        sum(t12(-p * log(p))).as("_h"))
     val wAll = Window.orderBy(lit(1))
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     perFrom
       .withColumn("_N", sum(col("n_trans")).over(wAll))
       .withColumn("_rate",
-        sum(round(col("n_trans").cast("double") / col("_N") *
-          col("_h").cast("double"), 12).cast("decimal(28,12)"))
+        sum(t12(col("n_trans").cast("double") / col("_N") *
+          col("_h").cast("double")))
           .over(wAll))
       .select(col("from_type"), col("n_trans"), col("n_next"),
         round(col("_h").cast("double"), 6).as("h_cond_r"),
@@ -375,8 +376,7 @@ object Behavior {
     terms.groupBy(col(entityCol))
       .agg(max(col("_n")).as("n_events"),
         count(lit(1)).as("n_types"),
-        sum(round(-col("_p") * log(col("_p")), 12)
-          .cast("decimal(28,12)")).as("_h"))
+        sum(t12(-col("_p") * log(col("_p")))).as("_h"))
       .select(col(entityCol), col("n_events"), col("n_types"),
         round(col("_h").cast("double"), 6).as("entropy_r"),
         when(col("n_types") > 1,
@@ -479,8 +479,8 @@ object Behavior {
         col("_n") - coalesce(sum(col("_all")).over(wOrd), lit(0L)))
       .filter(col("d") > 0)
       .withColumn("_ch",
-        sum(round(col("d").cast("double") / col("n_risk").cast("double"),
-          12).cast("decimal(28,12)")).over(wRun).cast("double"))
+        sum(t12(col("d").cast("double") / col("n_risk").cast("double")))
+          .over(wRun).cast("double"))
       .select(col("t"), col("n_risk"), col("d"),
         round(col("_ch"), 6).as("cumhaz_r"),
         round(exp(-col("_ch")), 6).as("fh_survival_r"))
@@ -519,7 +519,7 @@ object Behavior {
     val nD = col("n").cast("double")
     val a = r.groupBy(col("_t1"), col("_tn"))
       .agg(sum(col("d1")).as("o1"),
-        sum(round(dD * n1D / nD, 12).cast("decimal(28,12)")).as("_e1"),
+        sum(t12(dD * n1D / nD)).as("_e1"),
         sum(when(col("n") > 1,
           round(dD * (n1D / nD) * ((nD - n1D) / nD)
             * ((nD - dD) / (nD - 1)), 12))
@@ -793,8 +793,7 @@ object Behavior {
     for (_ <- 1 to iters) {
       pi = p.join(pi, p("from_type") === pi("state"))
         .groupBy(col("to_type").as("state"))
-        .agg(sum(round(col("pi") * col("p"), 12)
-          .cast("decimal(28,12)")).cast("double").as("pi"))
+        .agg(sum(t12(col("pi") * col("p"))).cast("double").as("pi"))
     }
     pi.select(col("state"), round(col("pi"), 6).as("pi_r"))
   }
@@ -929,8 +928,6 @@ object Behavior {
     * per entity: entityCol, n_events, n_types, h (DECIMAL 1e-12). */
   def typeEntropy(events: DataFrame, entityCol: String,
       typeCol: String): DataFrame = {
-    def t12(c: org.apache.spark.sql.Column) =
-      round(c, 12).cast("decimal(28,12)")
     val cnt = events.groupBy(col(entityCol), col(typeCol))
       .agg(count(lit(1)).as("_c"))
     val wu = Window.partitionBy(col(entityCol))
@@ -1058,7 +1055,6 @@ object Behavior {
     val wRun = Window.orderBy(col("t"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val total = perT.agg(sum(col("_all")).as("_n")).select(col("_n"))
-    def t12(c: Column) = round(c, 12).cast("decimal(28,12)")
     perT.crossJoin(broadcast(total))
       .withColumn("n_risk",
         col("_n") - coalesce(sum(col("_all")).over(wPrior), lit(0L)))
@@ -1098,7 +1094,6 @@ object Behavior {
     * pooled row: segment, n, slope_r, paradox. */
   def simpsonAudit(df: DataFrame, segCol: String, xCol: String,
       yCol: String): DataFrame = {
-    def t12(c: Column) = round(c, 12).cast("decimal(28,12)")
     // r15: ONE corpus pass. The pooled moments are the exact sums of
     // the per-segment DECIMAL moments (decimal addition is exact and
     // associative — guide §2.3 partial aggregation), so the second
@@ -1153,7 +1148,6 @@ object Behavior {
   def rmst(subjects: DataFrame, tCol: String, observedCol: String,
       tau: Long): DataFrame = {
     require(tau > 0, "tau must be positive")
-    def t12(c: Column) = round(c, 12).cast("decimal(28,12)")
     val perT = subjects
       .groupBy(col(tCol).cast("long").as("t"))
       .agg(sum(when(col(observedCol), 1L).otherwise(0L)).as("d"),

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.Exact.t12
+
 /** Probability-calibration and policy-evaluation metrics: is a model's
   * predicted probability TRUSTWORTHY (Hosmer–Lemeshow, ECE/MCE), did a
   * new model move subjects in the right direction (NRI/IDI), what
@@ -18,7 +20,6 @@ import org.apache.spark.sql.functions._
   */
 object Calibrate {
 
-  private def t12(c: Column) = round(c, 12).cast("decimal(28,12)")
 
   /** Hosmer–Lemeshow goodness-of-calibration χ² on EQUAL-WIDTH
     * probability bins (documented divergence from the classic

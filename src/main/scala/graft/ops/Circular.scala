@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Exact.t12
+
 /** Circular (directional) statistics on the time-of-day clock — the
   * family every diurnal-behavior question reduces to once "hour of
   * day" is recognized as an angle, not a line: midnight-adjacent
@@ -26,7 +28,6 @@ object Circular {
 
   private val MicrosPerDay = 86400000000L
 
-  private def t12(c: Column) = round(c, 12).cast("decimal(28,12)")
 
   /** Scala-computed (bin, cos, sin) weight rows at bin CENTERS —
     * θ_b = 2π(b+0.5)/bins — as both a DataFrame-able seq and the

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.Exact.t12
+
 /** Round-12 clustering-structure batch: grid-density clustering (the
   * DBSCAN shape that scales — density on a bounded cell grid, then
   * connected components over adjacent dense cells) and the
@@ -14,7 +16,6 @@ import org.apache.spark.sql.functions._
   * fixpoint fallback). */
 object Cluster {
 
-  private def t12(c: Column) = round(c, 12).cast("decimal(28,12)")
 
   /** DBSCAN-lite on two embedding dims: cells of side `h`, dense =
     * ≥ `minPts` points, clusters = connected components of

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.Exact.t12
+
 /** Corpus-level audit operators: slice-vs-slice overlap and divergence
   * reports a curation pipeline runs BEFORE mixing sources into a
   * training set (reference behavior generalized: the ETL's per-slice
@@ -296,7 +298,6 @@ object CorpusAudit {
     * (qi..., n, tv_r, breached at `threshold`). */
   def tCloseness(df: DataFrame, qiCols: Seq[String], sensCol: String,
       threshold: Double): DataFrame = {
-    def t12(c: Column) = round(c, 12).cast("decimal(28,12)")
     val qi = qiCols.map(col)
     val gs = df.groupBy(qi :+ col(sensCol): _*)
       .agg(count(lit(1)).as("_ngs"))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Exact.t12
+
 /** Corpus-curation operators for training-data pipelines: deterministic
   * splits, per-key quota capping, and benchmark decontamination. All are
   * shuffle-partitioned relational plans keyed on uniform md5-derived
@@ -518,7 +520,7 @@ object Curation {
           * col("_s").cast("double") / col("n").cast("double"))
         / (col("n").cast("double") - 1.0))).otherwise(lit(0.0)))
       .withColumn("_w", round(col("n").cast("double") * col("_sd"), 6))
-    val tot = stats.agg(sum(t12c(col("_w"))).cast("double").as("_tw"))
+    val tot = stats.agg(sum(t12(col("_w"))).cast("double").as("_tw"))
     val quota = stats.crossJoin(broadcast(tot))
       .withColumn("_q", round(lit(budget.toDouble) * col("_w")
         / col("_tw"), 9))
@@ -533,7 +535,6 @@ object Curation {
           1L).otherwise(0L)).as("alloc"))
   }
 
-  private def t12c(c: Column) = round(c, 12).cast("decimal(28,12)")
 
   /** Budget-constrained quality selection: per key, keep the
     * highest-`scoreCol` rows while their cumulative `tokenCol` stays
@@ -638,7 +639,6 @@ object Curation {
     * ht_se_r. */
   def htTotalAudit(df: DataFrame, idCol: String, yCol: String,
       scale: Double): DataFrame = {
-    def t12(c: Column) = round(c, 12).cast("decimal(28,12)")
     val u = (conv(substring(md5(col("_id").cast("string")), 1, 15),
       16, 10).cast("long").cast("double") + 1.0) /
       lit(1152921504606846976.0) // 2^60

@@ -6,6 +6,8 @@ import java.security.MessageDigest
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.Exact.{dec12, round12, round6, t12}
+
 /** Deduplication operators (builder north star; SURVEY.md §2.12):
   * exact (hash-groupBy), MinHash+LSH (shingle → minhash → band →
   * bucket-join), SimHash, and n-gram Jaccard verification.
@@ -462,7 +464,6 @@ object Dedup {
     * hash-agg/band-join over the (small) shingle table. */
   def minhashBiasAuditOnShingles(shingles: DataFrame,
       idCol: String): DataFrame = {
-    def t12(c: Column) = round(c, 12).cast("decimal(28,12)")
     val sig = minhashFromShingles(shingles, idCol)
     val cand = lshCandidatePairs(sig, idCol)
     val exact = jaccardForPairs(shingles, cand, idCol)
@@ -537,21 +538,11 @@ object Dedup {
       .collect()
       .map(r => (r.getBoolean(0), r.getBoolean(1), r.getBoolean(2),
         r.getLong(3)))
-    // non-finite guard (r14 ADVICE): BigDecimal.valueOf(NaN/Inf) throws
-    // NumberFormatException, whereas the relational round() this
-    // replaced passed non-finite doubles through. r12/r6 pass them
-    // through unchanged (Spark RoundBase behavior); a non-finite
-    // responsibility g poisons the EM trajectory to NaN exactly as the
-    // IEEE accumulation would (NaN in any term → every sum NaN).
-    def r12(x: Double): Double =
-      if (!java.lang.Double.isFinite(x)) x
-      else java.math.BigDecimal.valueOf(x)
-        .setScale(12, java.math.RoundingMode.HALF_UP).doubleValue()
-    // t12(double) as decimal(28,12): HALF_UP 12-dp round of the double,
-    // then the exact decimal of that value (Similarity.t12Local's form)
-    def t12d(x: Double): java.math.BigDecimal =
-      java.math.BigDecimal.valueOf(r12(x)).setScale(12,
-        java.math.RoundingMode.HALF_UP)
+    // non-finite guard (r14 ADVICE): round12/round6 pass non-finite
+    // doubles through unchanged (Spark RoundBase behavior); a
+    // non-finite responsibility g poisons the EM trajectory to NaN
+    // exactly as the IEEE accumulation would (NaN in any term → every
+    // sum NaN), so dec12 only ever sees finite terms.
     val nPairs = combos.map(_._4).sum
     var p = p0
     var m3v = Array(m0, m0, m0)
@@ -568,15 +559,15 @@ object Dedup {
           if (fs(j)) v(j) else 1.0 - v(j)
         val pm = lik(m3v, 0) * lik(m3v, 1) * lik(m3v, 2)
         val pu = lik(u3v, 0) * lik(u3v, 1) * lik(u3v, 2)
-        val g = r12(p * pm / (p * pm + (1.0 - p) * pu))
+        val g = round12(p * pm / (p * pm + (1.0 - p) * pu))
         if (!java.lang.Double.isFinite(g)) poisoned = true
         if (!poisoned) {
           val c = java.math.BigDecimal.valueOf(cnt)
-          sg = sg.add(t12d(g).multiply(c))
+          sg = sg.add(dec12(g).multiply(c))
           (0 until 3).foreach { j =>
             if (fs(j)) {
-              gs(j) = gs(j).add(t12d(g).multiply(c))
-              hs(j) = hs(j).add(t12d(1.0 - g).multiply(c))
+              gs(j) = gs(j).add(dec12(g).multiply(c))
+              hs(j) = hs(j).add(dec12(1.0 - g).multiply(c))
             }
           }
         }
@@ -588,29 +579,25 @@ object Dedup {
       } else {
         val nD = nPairs.toDouble
         val sgD = sg.doubleValue()
-        p = r12(sgD / nD)
-        m3v = gs.map(g => r12(g.doubleValue() / sgD))
-        u3v = hs.map(h => r12(h.doubleValue() / (nD - sgD)))
+        p = round12(sgD / nD)
+        m3v = gs.map(g => round12(g.doubleValue() / sgD))
+        u3v = hs.map(h => round12(h.doubleValue() / (nD - sgD)))
         if (!java.lang.Double.isFinite(p) || m3v.exists(v =>
             !java.lang.Double.isFinite(v)) || u3v.exists(v =>
             !java.lang.Double.isFinite(v))) poisoned = true
       }
     }
-    def r6(x: Double): Double =
-      if (!java.lang.Double.isFinite(x)) x
-      else java.math.BigDecimal.valueOf(x)
-        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
     def r6opt(cond: Boolean, x: => Double): Option[Double] =
-      if (nPairs > 0 && cond) Some(r6(x)) else None
+      if (nPairs > 0 && cond) Some(round6(x)) else None
     val sp = docs.sparkSession
     import sp.implicits._
     Seq(("f_source", 0), ("f_lang", 1), ("f_len", 2)).map {
       case (f, j) =>
         val (mj, uj) = (m3v(j), u3v(j))
         (f, nPairs,
-          if (nPairs > 0) Some(r6(p)) else None,
-          if (nPairs > 0) Some(r6(mj)) else None,
-          if (nPairs > 0) Some(r6(uj)) else None,
+          if (nPairs > 0) Some(round6(p)) else None,
+          if (nPairs > 0) Some(round6(mj)) else None,
+          if (nPairs > 0) Some(round6(uj)) else None,
           r6opt(mj > 0 && uj > 0, math.log(mj / uj)),
           r6opt(mj < 1 && uj < 1, math.log((1.0 - mj) / (1.0 - uj))))
     }.toDF("feature", "n_pairs", "p_match_r", "m_r", "u_r",

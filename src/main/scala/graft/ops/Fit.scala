@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Exact.t12
+
 /** Closed-form model fits computed from ONE pass of exact sufficient
   * statistics: the decision-stump split scan (the inner loop of every
   * tree learner and the standard univariate feature-importance screen)
@@ -187,8 +189,6 @@ object Fit {
     val fI = (col("_i").cast("double") - 0.3) /
       (col("_n").cast("double") + 0.4)
     val z = log(-log(lit(1.0) - fI))
-    def t12(c: org.apache.spark.sql.Column) =
-      round(c, 12).cast("decimal(28,12)")
     val agg = rows.agg(count(lit(1)).as("n"),
       sum(t12(x)).cast("double").as("_sx"),
       sum(t12(z)).cast("double").as("_sz"),
@@ -221,7 +221,7 @@ object Fit {
     val tail = df.where(col(xCol) >= xmin)
     val term = log(col(xCol).cast("double") / (xmin - 0.5))
     val agg = tail.agg(count(lit(1)).as("n_tail"),
-      sum(round(term, 12).cast("decimal(28,12)")).cast("double")
+      sum(t12(term)).cast("double")
         .as("_sl"))
     val n = col("n_tail").cast("double")
     val alpha = lit(1.0) + n / nullif(col("_sl"), lit(0.0))
@@ -407,7 +407,6 @@ object Fit {
   def logistic2Irls(cells: DataFrame, x1Col: String, x2Col: String,
       nCol: String, kCol: String, iters: Int = 4): DataFrame = {
     require(iters >= 1)
-    def t12(c: Column) = round(c, 12).cast("decimal(28,12)")
     val base = cells.select(
         round(log(lit(1.0) + col(x1Col).cast("double")), 12).as("_l1"),
         round(log(lit(1.0) + col(x2Col).cast("double")), 12).as("_l2"),

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.Exact.t12
+
 /** Round-12 forecasting batch: Brown's double exponential smoothing,
   * Croston's intermittent-demand method, and the Theta method (in its
   * SES-with-drift equivalence) — the classical per-series forecasters a
@@ -20,7 +22,6 @@ import org.apache.spark.sql.functions._
   */
 object Forecast {
 
-  private def t12(c: Column) = round(c, 12).cast("decimal(28,12)")
 
   /** One truncated-SES pass over a (day, value) frame: each observed
     * day's value contributes to days day..day+W−1 at weight
@@ -240,7 +241,6 @@ object Forecast {
   def forecastScorecard(events: DataFrame, keyCol: String,
       tsCol: String, lagDays: Int): DataFrame = {
     require(lagDays >= 2)
-    def t12(c: Column) = round(c, 12).cast("decimal(28,12)")
     val daily = events
       .groupBy(col(keyCol), to_date(col(tsCol)).as("day"))
       .agg(count(lit(1)).as("x"))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Exact.t12
+
 /** Data-forensics audits — the "does this feed look fabricated or
   * degraded" battery an ingestion pipeline runs on monetary and event
   * streams: Benford first-digit conformity, last-digit uniformity,
@@ -23,7 +25,6 @@ import org.apache.spark.sql.functions._
   */
 object Forensics {
 
-  private def t12(c: Column) = round(c, 12).cast("decimal(28,12)")
 
   /** The 9 Benford probabilities p_d = log10(1 + 1/d), as Scala
     * literals (shared with oracle SQL). */

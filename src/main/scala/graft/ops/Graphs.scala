@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Exact.t12
+
 /** Relational graph analytics: co-occurrence edge extraction and triangle
   * counting, expressed as plain joins so Catalyst owns the distribution.
   * Complements [[Dedup.nearDupComponents]] (connected components) on the
@@ -108,7 +110,6 @@ object Graphs {
   def pageRankConvergence(edges: DataFrame, iters: Int,
       damping: Double = 0.85): DataFrame = {
     require(iters >= 1, "need at least one iteration")
-    def t12(c: Column) = round(c, 12).cast("decimal(28,12)")
     val sym = edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
       .cache()
@@ -573,7 +574,7 @@ object Graphs {
     val contrib = col("e_c").cast("double") / col("_m") -
       (col("d_c").cast("double") / (lit(2.0) * col("_m"))) *
         (col("d_c").cast("double") / (lit(2.0) * col("_m")))
-    val q = perC.agg(sum(round(contrib, 12).cast("decimal(28,12)"))
+    val q = perC.agg(sum(t12(contrib))
       .as("_q"))
     perC.crossJoin(broadcast(q))
       .select(col("label"), col("n_vertices"), col("e_c"), col("d_c"),

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Exact.t12
+
 /** Classical statistical inference over warehouse-scale aggregates:
   * Welch's unequal-variance t-test, normal-tail p-values, and
   * Benjamini–Hochberg false-discovery-rate control. The reference
@@ -161,10 +163,8 @@ object Infer {
     val obar = col("_k").cast("double") / col("_n")
     withTot.groupBy(col("_n").as("n"), col("_k").as("k"))
       .agg(count(lit(1)).as("n_bins"),
-        sum(round(col("_nb") * ((fb - ob) * (fb - ob)), 12)
-          .cast("decimal(28,12)")).as("_rel"),
-        sum(round(col("_nb") * ((ob - obar) * (ob - obar)), 12)
-          .cast("decimal(28,12)")).as("_res"),
+        sum(t12(col("_nb") * ((fb - ob) * (fb - ob)))).as("_rel"),
+        sum(t12(col("_nb") * ((ob - obar) * (ob - obar)))).as("_res"),
         sum(col("_sq")).as("_br"))
       .select(col("n"), col("n_bins"),
         round(col("k").cast("double") / col("n"), 6).as("base_rate_r"),
@@ -241,8 +241,8 @@ object Infer {
     val p = col("k").cast("double") / col("n")
     val mom = seg.agg(
       count(lit(1)).as("_m0"),
-      sum(round(p, 12).cast("decimal(28,12)")).as("_sp"),
-      sum(round(p * p, 12).cast("decimal(28,12)")).as("_spp"))
+      sum(t12(p)).as("_sp"),
+      sum(t12(p * p)).as("_spp"))
     val m = col("_sp").cast("double") / col("_m0")
     val v = col("_spp").cast("double") / col("_m0") - m * m
     val prec = m * (lit(1.0) - m) / nullif(v, lit(0.0)) - lit(1.0)
@@ -355,8 +355,8 @@ object Infer {
     val g = cell.groupBy(col(groupCol)).agg(
       sum(col("_nc")).as("n"), count(lit(1)).as("k"),
       sum(col("_sc")).as("_s"), sum(col("_ssc")).as("_ss"),
-      sum(round(col("_sc").cast("double") * col("_sc").cast("double")
-        / col("_nc").cast("double"), 12).cast("decimal(28,12)"))
+      sum(t12(col("_sc").cast("double") * col("_sc").cast("double")
+        / col("_nc").cast("double")))
         .as("_t12"))
     val nD = col("n").cast("double")
     val sD = col("_s").cast("double")
@@ -395,7 +395,7 @@ object Infer {
     val g = cell.groupBy(col(groupCol)).agg(
       sum(col("_nc")).as("n"), count(lit(1)).as("k"),
       sum(col("_ssc")).as("_ss"),
-      sum(round(scD * scD / ncD, 12).cast("decimal(28,12)"))
+      sum(t12(scD * scD / ncD))
         .as("_t12"),
       // guard the ln: a zero-variance cell must yield a NULL term in
       // BOTH engines (Spark ln(0)=null is sum-skipped; DuckDB's −inf
@@ -403,7 +403,7 @@ object Infer {
       // nullifies the statistic identically
       sum(when(s2 > 0, round((ncD - 1) * log(s2), 12))
         .cast("decimal(28,12)")).as("_lt"),
-      sum(round(lit(1.0) / (ncD - 1), 12).cast("decimal(28,12)"))
+      sum(t12(lit(1.0) / (ncD - 1)))
         .as("_inv"),
       min(s2).as("_mins2"))
     val nD = col("n").cast("double")
@@ -436,8 +436,8 @@ object Infer {
       sum(col("_nc")).as("n"), count(lit(1)).as("k"),
       sum(col("_sc")).as("_s"), sum(col("_ssc")).as("_ss"),
       sum(col("_nc").cast("decimal(38,0)") * col("_nc")).as("_nc2"),
-      sum(round(col("_sc").cast("double") * col("_sc").cast("double")
-        / col("_nc").cast("double"), 12).cast("decimal(28,12)"))
+      sum(t12(col("_sc").cast("double") * col("_sc").cast("double")
+        / col("_nc").cast("double")))
         .as("_t12"))
     val nD = col("n").cast("double")
     val kD = col("k").cast("double")
@@ -472,7 +472,7 @@ object Infer {
     val vI = (col("_ss").cast("double") / nD) -
       ((col("_s").cast("double") / nD) * (col("_s").cast("double") / nD))
     val items = item.agg(count(lit(1)).as("k_items"),
-      sum(round(vI, 12).cast("decimal(28,12)")).cast("double")
+      sum(t12(vI)).cast("double")
         .as("_sumvar"))
     val subj = grid.groupBy(col(subjectCol))
       .agg(sum(col(valueCol)).as("_tot"))
@@ -563,9 +563,8 @@ object Infer {
         .as("_tie"))
     val g = cells.groupBy(col(groupCol)).agg(
       sum(col("_nc")).as("n"), count(lit(1)).as("k"),
-      sum(round(col("_s2").cast("double") * col("_s2").cast("double")
-        / (lit(4.0) * col("_nc").cast("double")), 12)
-        .cast("decimal(28,12)")).as("_t12"))
+      sum(t12(col("_s2").cast("double") * col("_s2").cast("double")
+        / (lit(4.0) * col("_nc").cast("double")))).as("_t12"))
       .join(ties, Seq(groupCol))
     val nD = col("n").cast("double")
     val h = lit(12.0) / (nD * (nD + lit(1.0))) *
@@ -776,8 +775,6 @@ object Infer {
       .localCheckpoint() // consumed by totals + two replicate passes
     val tot = blocks.agg(sum(col("_y")).as("_sy"),
       sum(col("_n")).as("_sn"), count(lit(1)).as("_b"))
-    def t12(c: org.apache.spark.sql.Column) =
-      round(c, 12).cast("decimal(28,12)")
     val theta = col("_sy").cast("double") / col("_sn").cast("double")
     // nullif guard (the repo-wide ÷0 convention): a single-block input
     // or a block holding the entire denominator makes Sn − n_i = 0 —
@@ -823,7 +820,6 @@ object Infer {
   def plattScaling(df: DataFrame, xCol: String, labelCol: String,
       lo: Double, hi: Double, bins: Int, iters: Int): DataFrame = {
     require(bins >= 2 && iters >= 1, "need >=2 bins and >=1 iteration")
-    def t12(c: Column) = round(c, 12).cast("decimal(28,12)")
     val width = (hi - lo) / bins
     val grid = df
       .select(col(xCol).cast("double").as("_x"),
@@ -1053,7 +1049,6 @@ object Infer {
     * re-weighting pass over the k-row frame with τ² broadcast. */
   def metaDL(df: DataFrame, strataCol: String, exposedCol: Column,
       caseCol: Column): DataFrame = {
-    def t12(c: Column) = round(c, 12).cast("decimal(28,12)")
     val lor = lorFrame(df, strataCol, exposedCol, caseCol)
       .localCheckpoint() // ≤k rows; both weighting passes
     val m1 = lor.agg(count(lit(1)).as("k"),
@@ -1093,7 +1088,6 @@ object Infer {
     * intercept_r, slope_r, r2_r. */
   def eggerSmallStudy(df: DataFrame, strataCol: String,
       exposedCol: Column, caseCol: Column): DataFrame = {
-    def t12(c: Column) = round(c, 12).cast("decimal(28,12)")
     val pts = lorFrame(df, strataCol, exposedCol, caseCol)
       .select(round(col("_y") / sqrt(col("_v")), 12).as("_z"),
         round(lit(1.0) / sqrt(col("_v")), 12).as("_p"))

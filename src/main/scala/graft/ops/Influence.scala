@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.Exact.t12
+
 /** Round-12 regression-influence batch: the classical OLS diagnostics
   * (hat leverage, Cook's distance, PRESS/LOOCV, externally studentized
   * residuals) plus the design-side collinearity readouts (VIF, ridge
@@ -83,11 +85,11 @@ object Influence {
   def pressLoocv(grain: DataFrame, keyCol: String, xCol: String,
       yCol: String, yScale: Double): DataFrame = {
     val press = diag(grain, keyCol, xCol, yCol)
-      .withColumn("_pt", round(
+      .withColumn("_pt", t12(
         (col("_e") / lit(yScale)) / nullif(lit(1.0) - col("_h"),
           lit(0.0))
         * (col("_e") / lit(yScale)) / nullif(lit(1.0) - col("_h"),
-          lit(0.0)), 12).cast("decimal(28,12)"))
+          lit(0.0))))
       .agg(count(lit(1)).cast("double").as("_nn"),
         sum(col("_pt")).cast("double").as("_press"),
         first(col("_s2")).as("_s2f"), first(col("_n")).as("_nf"),

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Exact.t12
+
 /** Nonparametric / distribution-free statistics over pre-aggregated
   * grains — the round-9 depth batch: Kendall's τ-b + Somers' D,
   * Mann–Whitney U (tie- and continuity-corrected z, Cliff's δ),
@@ -92,7 +94,6 @@ object Nonparam {
   def cramerVonMises(df: DataFrame, valueCol: String, groupCol: String,
       aVal: String, bVal: String,
       bandWidth: Double = 16.0): DataFrame = {
-    def t12(c: Column) = round(c, 12).cast("decimal(28,12)")
     val g = ecdfGrain(df, valueCol, groupCol, aVal, bVal, bandWidth)
       .localCheckpoint() // totals + term sum read it
     val tot = g.agg(sum(col("_na")).as("n_a"), sum(col("_nb")).as("n_b"))
@@ -539,7 +540,6 @@ object Nonparam {
   def hellingerPairs(df: DataFrame, groupCol: String, valueCol: String,
       bandCents: Long): DataFrame = {
     require(bandCents > 0, "bandCents must be > 0")
-    def t12(c: Column) = round(c, 12).cast("decimal(28,12)")
     val binned = df.select(col(groupCol).cast("string").as("_g"),
       expr(s"cast($valueCol as bigint) div $bandCents").as("_b"))
     val cnt = binned.groupBy(col("_g"), col("_b"))
@@ -590,7 +590,6 @@ object Nonparam {
   def mmdRbf(emb: DataFrame, labelCol: String, labelA: Int,
       labelB: Int, gamma: Double): DataFrame = {
     import graft.expr.VectorKernels.dot_product
-    def t12(c: Column) = round(c, 12).cast("decimal(28,12)")
     val base = emb
       .filter(col(labelCol).isin(labelA, labelB))
       .select(col("vec_id").as("_id"), col(labelCol).as("_l"),
@@ -646,7 +645,6 @@ object Nonparam {
   def adExponentiality(events: DataFrame, entityCol: String,
       tsCol: String, idCol: String,
       bandWidth: Double = 1000.0): DataFrame = {
-    def t12(c: Column) = round(c, 12).cast("decimal(28,12)")
     val w = Window.partitionBy(col(entityCol))
       .orderBy(col(tsCol), col(idCol))
     val gaps = events
@@ -715,7 +713,6 @@ object Nonparam {
   private def twoSampleCore(df: DataFrame, valueCol: String,
       groupCol: String, aVal: String, bVal: String,
       bandWidth: Double): DataFrame = {
-    def t12(c: Column) = round(c, 12).cast("decimal(28,12)")
     val per = df.where(col(groupCol).isin(aVal, bVal))
       .groupBy(col(valueCol))
       .agg(sum(when(col(groupCol) === aVal, 1L).otherwise(0L)).as("_na"),
@@ -913,7 +910,6 @@ object Nonparam {
         margin.cast("double") / col("n").cast("double")
       (o.cast("double") - e) * (o.cast("double") - e) / e
     }
-    def t12(c: Column) = round(c, 12).cast("decimal(28,12)")
     cells
       .select(col("k"), col("n"), col("_med"),
         t12(chiTerm(col("_ab"), col("_tab"))
@@ -1049,7 +1045,6 @@ object Nonparam {
     * trick). */
   def adTwoSample(df: DataFrame, valueCol: String, groupCol: String,
       aVal: String, bVal: String, bandWidth: Double = 16.0): DataFrame = {
-    def t12(c: Column) = round(c, 12).cast("decimal(28,12)")
     val per = df.where(col(groupCol).isin(aVal, bVal))
       .groupBy(col(valueCol))
       .agg(sum(when(col(groupCol) === aVal, 1L).otherwise(0L)).as("_na"),

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Exact.t12
+
 /** Post-hoc and stratified-contingency inference: the tests that come
   * AFTER an omnibus rejection — which pairs differ (Dunn, Tukey HSD),
   * does the effect trend along an ordering (Page), is a treatment
@@ -19,7 +21,6 @@ import org.apache.spark.sql.functions._
   */
 object Posthoc {
 
-  private def t12(c: Column) = round(c, 12).cast("decimal(28,12)")
 
   /** Dunn's post-hoc test after Kruskal–Wallis: pairwise z on
     * tie-corrected mid-rank means,

@@ -4,6 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.DriverLocal
+import graft.util.Exact.{round6, t12}
+
 /** Data-quality profiling: per-column statistics, fixed-width value
   * histograms, and robust per-group outlier flagging — the inspection
   * pass a curation pipeline runs before anything trains on a corpus.
@@ -821,8 +824,6 @@ object Profile {
     * theil_t_r, theil_l_r. */
   def theilInequality(df: DataFrame, groupCol: String,
       valueCol: String): DataFrame = {
-    def t12(c: org.apache.spark.sql.Column) =
-      round(c, 12).cast("decimal(28,12)")
     val pos = df
       .select(col(groupCol), col(valueCol).cast("decimal(38,0)").as("_x"))
       .where(col("_x") > 0)
@@ -913,24 +914,13 @@ object Profile {
     val sp = df.sparkSession
     val v = df.select(col(idCol).as("_i"),
       col(valueCol).cast("long").as("_x"))
-    val cap = sp.conf.get("spark.graft.driverLocal.snGrainCap",
-      SnGrainCap.toString).toInt
-    // limit(cap + 1) bounds the collect: an over-cap grain costs one
-    // extra row, never a driver OOM, and falls back distributed
-    val rows = v.limit(cap + 1).collect()
-    if (rows.length <= cap &&
-        rows.forall(r => !r.isNullAt(0) && !r.isNullAt(1)))
-      snScaleLocal(sp, rows.map(r => (r.get(0), r.getLong(1))))
-    else snScaleDistributed(v)
+    DriverLocal.collect(v, DriverLocal.SnGrain)
+      .filter(_.forall(r => !r.isNullAt(0) && !r.isNullAt(1))) match {
+      case Some(rows) =>
+        snScaleLocal(sp, rows.map(r => (r.get(0), r.getLong(1))))
+      case None => snScaleDistributed(v)
+    }
   }
-
-  /** Default cap on collected grain rows for the driver-local Sn
-    * selection: the driver does O(n² log n) comparisons over n longs,
-    * so the cap bounds CPU, not just memory (2¹³ ≈ 8k rows → 67M
-    * comparisons, well under a second; a calendar-day grain is ~2.5k
-    * at any corpus size). Conf-gated via
-    * `spark.graft.driverLocal.snGrainCap`. */
-  val SnGrainCap: Int = 1 << 13
 
   /** Driver-local Sn selection — value-identical to
     * [[snScaleDistributed]]: same pair universe (partners with a
@@ -977,8 +967,7 @@ object Profile {
     val arr = hms.toArray
     java.util.Arrays.sort(arr)
     val snRaw = arr(k2 - 1)
-    val snR = java.math.BigDecimal.valueOf(1.1926 * snRaw.toDouble)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+    val snR = round6(1.1926 * snRaw.toDouble)
     frame(Seq(org.apache.spark.sql.Row(n.toLong, snRaw, snR)))
   }
 
@@ -1018,7 +1007,6 @@ object Profile {
     * one row: n_keys, mean_r, var_r, dispersion_r (v/m), nb_r_r,
     * nb_p_r. */
   def negbinFit(df: DataFrame, keyCol: String): DataFrame = {
-    def t12(c: Column) = round(c, 12).cast("decimal(28,12)")
     val counts = df.groupBy(col(keyCol)).agg(count(lit(1)).as("_n"))
     val m = counts.agg(count(lit(1)).as("n_keys"),
       sum(col("_n")).as("_s1"),
@@ -1046,8 +1034,6 @@ object Profile {
     * (group, n, atkinson05_r, atkinson1_r, atkinson2_r, ge2_r). */
   def atkinsonGe(df: DataFrame, groupCol: String,
       valueCol: String): DataFrame = {
-    def t12(c: org.apache.spark.sql.Column) =
-      round(c, 12).cast("decimal(28,12)")
     val pos = df
       .select(col(groupCol), col(valueCol).cast("decimal(38,0)").as("_x"))
       .where(col("_x") > 0)
@@ -1086,8 +1072,6 @@ object Profile {
     * exp. */
   def lDiversity(df: DataFrame, qiCols: Seq[String],
       sensitiveCol: String): DataFrame = {
-    def t12(c: org.apache.spark.sql.Column) =
-      round(c, 12).cast("decimal(28,12)")
     val cells = df.groupBy(
         (qiCols.map(col) :+ col(sensitiveCol)): _*)
       .agg(count(lit(1)).as("_c"))

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.Exact.t12
+
 /** Capacity planning on measured arrival streams: the Erlang-C
   * staffing table (the call-center/serving-fleet sizing formula) and
   * the newsvendor critical-fractile stock level — both reduce the
@@ -11,7 +13,6 @@ import org.apache.spark.sql.functions._
   */
 object Queueing {
 
-  private def t12(c: Column) = round(c, 12).cast("decimal(28,12)")
 
   /** Scala-computed ln(k!) literals (the spectralPower no-engine-trig
     * discipline — shared verbatim with oracle SQL). */

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Exact.t12
+
 /** Distances between two RANKINGS of the same bounded item universe —
   * the leaderboard-comparison toolkit next to q276's top-k drift
   * (membership churn) and `Retrieval.rboAt` (top-weighted overlap of
@@ -89,7 +91,6 @@ object RankDist {
     * Returns one row: n_a, n_b, gap_r, explained_r, unexplained_r. */
   def oaxacaBlinder(df: DataFrame, groupCol: String, groupA: String,
       groupB: String, xCol: String, yCol: String): DataFrame = {
-    def t12(c: Column) = round(c, 12).cast("decimal(28,12)")
     val m = df.filter(col(groupCol).isin(groupA, groupB))
       .groupBy(col(groupCol))
       .agg(count(lit(1)).as("_n"),

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Exact.t12
+
 /** Distributed EXACT per-group ranking without a per-group single-task
   * sort — the scale-safe replacement for `row_number() OVER (PARTITION BY
   * group ORDER BY value)` when one group can hold billions of rows (a
@@ -425,10 +427,9 @@ object Ranks {
           * (d("_CT") - d("_CC") * (d("_NT") / d("_NC")))).as("_rand"))
     val wl = Window.orderBy("bucket")
     val tr = qq.select(col("bucket"),
-      round(((col("_qini") + lag(col("_qini"), 1, 0.0).over(wl)) / 2
+      t12(((col("_qini") + lag(col("_qini"), 1, 0.0).over(wl)) / 2
         - (col("_rand") + lag(col("_rand"), 1, 0.0).over(wl)) / 2)
-        * (col("_x") - lag(col("_x"), 1, 0.0).over(wl)), 12)
-        .cast("decimal(28,12)").as("_term"))
+        * (col("_x") - lag(col("_x"), 1, 0.0).over(wl))).as("_term"))
     // a NULL trapezoid term (an early bucket with nc_cum = 0 makes its
     // _qini undefined) would be silently SKIPPED by the DECIMAL sum,
     // understating the area over a partial curve — so the AUC is

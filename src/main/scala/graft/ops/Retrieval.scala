@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Exact.t12
+
 /** Lexical retrieval scoring: Okapi BM25 over the corpus, the standard
   * first-stage ranker for retrieval-augmented pipelines and the lexical
   * complement to the embedding ANN surface ([[Similarity]],
@@ -271,7 +273,6 @@ object Retrieval {
   def lmDirichletTopK(docs: DataFrame, idCol: String, textCol: String,
       queryTerms: Seq[String], k: Int, mu: Double): DataFrame = {
     require(queryTerms.nonEmpty && mu > 0)
-    def t12(c: Column) = round(c, 12).cast("decimal(28,12)")
     val tok = docs.select(col(idCol),
       explode(TextOps.tokens(TextOps.normalize(col(textCol))))
         .as("term"))
@@ -337,7 +338,6 @@ object Retrieval {
       .groupBy(col("_d"))
       .agg(sum(when(col("_dmin") <= col("_d"), 1L).otherwise(0L))
         .as("_xd"))
-    def t12(c: Column) = round(c, 12).cast("decimal(28,12)")
     xd.agg(
         sum(t12(col("_xd").cast("double") / col("_d")
           * pow(lit(p), col("_d")))).cast("double").as("_s"),
@@ -374,7 +374,6 @@ object Retrieval {
           / math.pow(2.0, maxGrade)).as("_rel"))
     val wPrev = Window.orderBy(col("_r"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    def t12(c: Column) = round(c, 12).cast("decimal(28,12)")
     val terms = rr
       .withColumn("_lnSum", coalesce(
         sum(t12(log(lit(1.0) - col("_rel")))).over(wPrev)

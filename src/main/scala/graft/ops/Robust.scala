@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.Exact.t12
+
 /** Round-12 robust-statistics batch: iterative estimators that follow
   * the engine's fixed-step bounded-grain discipline (the plattScaling
   * idiom — one data-sized pass to a grid/grain, then every iteration is
@@ -17,7 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object Robust {
 
-  private def t12(c: Column) = round(c, 12).cast("decimal(28,12)")
   private def d38(c: Column) = c.cast("decimal(38,0)")
 
   /** Iterative Grubbs / generalized-ESD style outlier peeling on a

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Exact.t12
+
 /** Round-12 sequence-analysis batch: z-normalized subsequence motif
   * discovery (the matrix-profile readout), SAX symbolization distance,
   * lag-1 transfer entropy, the Hoeffding-bound split detector
@@ -20,7 +22,6 @@ import org.apache.spark.sql.functions._
 object Sequence {
 
   private def d38(c: Column) = c.cast("decimal(38,0)")
-  private def t12(c: Column) = round(c, 12).cast("decimal(28,12)")
 
   /** Top-k closest z-normalized subsequence pairs of a day-grain
     * series (the matrix-profile motif): windows of `w` consecutive
@@ -285,10 +286,9 @@ object Sequence {
     val g = grid.crossJoin(broadcast(tot))
     val p = col("n_p").cast("double") / col("_n").cast("double")
     val h = g.agg(sum(when(col("n_p") > 0,
-        round(-(col("n_p").cast("double") / col("_n").cast("double"))
-          * log(col("n_p").cast("double") / col("_n").cast("double")),
-          12).cast("decimal(28,12)")).otherwise(
-        lit(0).cast("decimal(28,12)"))).cast("double").as("_h"))
+        t12(-(col("n_p").cast("double") / col("_n").cast("double"))
+          * log(col("n_p").cast("double") / col("_n").cast("double"))))
+        .otherwise(lit(0).cast("decimal(28,12)"))).cast("double").as("_h"))
     g.crossJoin(broadcast(h))
       .select(col("pattern"), col("n_p"), round(p, 6).as("p_r"),
         round(col("_h"), 6).as("h_r"),

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.expr.VectorKernels.cosine_sim
+import graft.util.DriverLocal
+import graft.util.Exact.{dec12, round6, t12}
 
 /** Similarity search over an `array<float>` embedding column
   * (builder north star; SURVEY.md §2.12).
@@ -53,9 +55,10 @@ object Similarity {
     cosineTopKUnchecked(collection, queries, k)
   }
 
-  // Shape note (r14 optimization round, measured in tools/KnnProbe at
-  // sf0.1, steady passes): the former row_number window — even with
-  // Spark 4's automatic WindowGroupLimit(partial/final) — sorts every
+  // Shape note (r14 optimization round, measured on q418 at sf0.1,
+  // steady passes; the benchmark's traced query_mix run profiles it
+  // per layer): the former row_number window — even with Spark 4's
+  // automatic WindowGroupLimit(partial/final) — sorts every
   // partition's sim rows before limiting: 5.0–6.3 s on the 4M-row sim
   // stream whose BNLJ+cosine floor is ~2.0–2.5 s. The typed
   // [[graft.expr.TopKNeighbors]] aggregate replaces the sort with one
@@ -199,8 +202,6 @@ object Similarity {
     * defined cosine dropped). */
   def assignCells(collection: DataFrame, centroids: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.{ArrayType, FloatType, LongType}
-    val cap = collection.sparkSession.conf
-      .get("spark.graft.similarity.maxLiteralCentroids", "65536").toInt
     val centSel = centroids
       .select(col("vec_id").as("cid"), col("embedding").as("c_emb"))
     val typed = centSel.schema("cid").dataType == LongType &&
@@ -208,11 +209,12 @@ object Similarity {
         case ArrayType(FloatType, _) => true
         case _ => false
       })
-    // limit(cap + 1) bounds the collect itself: an over-cap centroid
-    // set costs one extra row, never a driver OOM
-    val rows = if (typed) centSel.limit(cap + 1).collect() else null
-    if (typed && rows.length <= cap) {
-      val cents: Seq[(Long, Seq[Float])] = rows.toSeq
+    val rows =
+      if (typed) DriverLocal.collect(centSel, DriverLocal.Centroids)
+      else None
+    if (rows.isEmpty) assignCellsExploded(collection, centroids)
+    else {
+      val cents: Seq[(Long, Seq[Float])] = rows.get.toSeq
         .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
         .map { r =>
           // null array elements read as 0.0f in the unsafe row format
@@ -226,7 +228,7 @@ object Similarity {
           .nearest_centroid(col("embedding"), cents))
         .filter(col("cid").isNotNull)
         .select(col("vec_id"), col("embedding"), col("cid"))
-    } else assignCellsExploded(collection, centroids)
+    }
   }
 
   /** The pre-r15 assignment shape, kept as the over-valve fallback:
@@ -600,7 +602,7 @@ object Similarity {
         (col("_s1") - col("_s2")) / (lit(1.0) - col("_s2"))))
       .groupBy(col("cid"))
       .agg(count(lit(1)).as("n"),
-        round(sum(round(col("_sil"), 12).cast("decimal(28,12)"))
+        round(sum(t12(col("_sil")))
           .cast("double") / count(col("_sil")), 6).as("mean_sil_r"))
   }
 
@@ -627,7 +629,7 @@ object Similarity {
       .filter(col("crn") === 1)
     val scat = assigned.groupBy(col("cid"))
       .agg(count(lit(1)).as("n"),
-        (sum(round(lit(1.0) - col("csim"), 12).cast("decimal(28,12)"))
+        (sum(t12(lit(1.0) - col("csim")))
           .cast("double") / count(lit(1))).as("_s"))
     val ci = centroids.select(col("vec_id").as("_ci"),
       col("embedding").as("_ei"))
@@ -653,7 +655,7 @@ object Similarity {
         max((col("_si") + col("_sj")) / col("_m"))).as("_rmax"))
     val joined = scat.join(rmax, Seq("cid"), "left")
     val db = joined.agg(
-      (sum(round(col("_rmax"), 12).cast("decimal(28,12)"))
+      (sum(t12(col("_rmax")))
         .cast("double") / count(lit(1))).as("_db"),
       sum(when(col("_rmax").isNull, 1L).otherwise(0L)).as("_nbad"))
     joined.crossJoin(broadcast(db))
@@ -676,8 +678,6 @@ object Similarity {
     * DECIMAL sums (order-independent). Zero-norm vectors are
     * excluded. Returns one row: n, sum_sq_r, mean_pair_cos_r. */
   def isotropyAudit(collection: DataFrame): DataFrame = {
-    def t12(c: org.apache.spark.sql.Column) =
-      round(c, 12).cast("decimal(28,12)")
     val withN = collection.select(
         expr("cast(embedding as array<double>)").as("e"),
         expr("sqrt(aggregate(cast(embedding as array<double>), 0D," +
@@ -725,8 +725,6 @@ object Similarity {
     * provide this parallelism and the tiny extra shuffle is noise).
     * Returns one row: d, trace_r, fro2_r, pr_r. */
   def participationRatio(collection: DataFrame): DataFrame = {
-    def t12(c: org.apache.spark.sql.Column) =
-      round(c, 12).cast("decimal(28,12)")
     val m = secondMomentMatrix(collection)
       .localCheckpoint() // consumed by trace AND Frobenius reductions
     val tr = m.where(col("j") === col("k"))
@@ -860,28 +858,10 @@ object Similarity {
     val sp = collection.sparkSession
     import sp.implicits._
     val (v, lam) = powerIterLocal(collectMoment(collection), iters)
-    val lamR = round6Local(lam)
-    v.map { case (j, vj) => (j, round6Local(vj), lamR) }.toSeq
+    val lamR = round6(lam)
+    v.map { case (j, vj) => (j, round6(vj), lamR) }.toSeq
       .toDF("j", "loading_r", "lambda_r")
   }
-
-  /** Spark's `round(col, 12).cast("decimal(28,12)")` pipeline replayed
-    * on the driver, call for call: Round(double) goes through the
-    * shortest-repr `BigDecimal.valueOf(double)` then HALF_UP setScale
-    * back to double, and the Cast re-parses THAT rounded double the
-    * same way — two steps, not one, because the decimal→double→decimal
-    * round-trip is itself part of the trajectory both engines walk. */
-  private def t12Local(x: Double): java.math.BigDecimal = {
-    val r = java.math.BigDecimal.valueOf(x)
-      .setScale(12, java.math.RoundingMode.HALF_UP).doubleValue()
-    java.math.BigDecimal.valueOf(r)
-      .setScale(12, java.math.RoundingMode.HALF_UP)
-  }
-
-  /** Spark's `round(col, 6)` on a double, replayed on the driver. */
-  private def round6Local(x: Double): Double =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
   /** The ONE data-sized pass of the eigen family, collected: d² rows,
     * bounded by the embedding dimension (64² = 4096 here; ≤ 1M even at
@@ -890,30 +870,17 @@ object Similarity {
     * eigensolves locally). This collect is deliberate and scale-safe:
     * at 100 TB the matrix is still d². */
   private def collectMoment(collection: DataFrame)
-      : Array[(Int, Int, Double)] = {
-    val rows = secondMomentMatrix(collection).collect()
-    val cap = collection.sparkSession.conf.get(
-      "spark.graft.driverLocal.momentCap", MomentCap.toString).toInt
-    require(rows.length <= cap, s"moment matrix has ${rows.length}" +
-      s" entries > cap $cap — the eigen recursion is driver-local" +
-      " on the d² Gramian, which must stay dimension-bounded (not" +
-      " data-sized)")
-    rows.map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
-  }
-
-  /** Default cap on collected moment-matrix entries for the
-    * driver-local eigen recursions: d² by contract (embedding
-    * dimension, never rows) — 2048² headroom; an unbounded caller
-    * fails loudly here instead of OOMing the driver. Conf-gated via
-    * `spark.graft.driverLocal.momentCap`. */
-  val MomentCap: Int = 1 << 22
+      : Array[(Int, Int, Double)] =
+    DriverLocal.collectOrFail(secondMomentMatrix(collection),
+      DriverLocal.Moment, "the d² moment matrix")
+      .map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
 
   /** Driver-local power iteration over the collected moment matrix —
     * the round-13 replacement for the per-step localCheckpoint chain
     * (each step was a d-row broadcast join whose ~0.35 s checkpoint
     * floor dominated the family's wall time; 12+ steps of pure fixed
     * cost). The trajectory is BIT-IDENTICAL to the distributed form:
-    * every product is 12-dp-rounded through [[t12Local]] (the exact
+    * every product is 12-dp-rounded through [[dec12]] (the exact
     * Round+Cast calls Spark codegen executes), partial sums are exact
     * decimals (order-independent), norms/divisions are the same IEEE
     * doubles — so the DuckDB oracle's unrolled 12-dp CTE chain sees
@@ -928,7 +895,7 @@ object Similarity {
       byJ.map { case (j, rows) =>
         var acc = java.math.BigDecimal.ZERO
         rows.foreach { case (_, k, mjk) =>
-          vec.get(k).foreach(vk => acc = acc.add(t12Local(mjk * vk)))
+          vec.get(k).foreach(vk => acc = acc.add(dec12(mjk * vk)))
         }
         j -> acc.doubleValue
       }
@@ -936,14 +903,14 @@ object Similarity {
     for (_ <- 1 to iters) {
       u = mv(v)
       var nacc = java.math.BigDecimal.ZERO
-      u.valuesIterator.foreach(uj => nacc = nacc.add(t12Local(uj * uj)))
+      u.valuesIterator.foreach(uj => nacc = nacc.add(dec12(uj * uj)))
       val nrm = math.sqrt(nacc.doubleValue)
       v = u.map { case (j, uj) => j -> uj / nrm }
     }
     val uf = mv(v)
     var lacc = java.math.BigDecimal.ZERO
     v.foreach { case (j, vj) =>
-      uf.get(j).foreach(ufj => lacc = lacc.add(t12Local(vj * ufj)))
+      uf.get(j).foreach(ufj => lacc = lacc.add(dec12(vj * ufj)))
     }
     (dims.map(j => j -> v(j)), lacc.doubleValue)
   }
@@ -1027,8 +994,6 @@ object Similarity {
     * hash-agg on n·k rows. Returns one row:
     * (n_queries, n_degenerate, mean_lid_r, min_lid_r, max_lid_r). */
   def lidMle(knn: DataFrame): DataFrame = {
-    def t12(c: org.apache.spark.sql.Column) =
-      round(c, 12).cast("decimal(28,12)")
     val d = knn.select(col("q_id"),
       greatest(lit(1.0) - col("sim_r"), lit(1e-12)).as("_d"))
     val per = d.groupBy(col("q_id")).agg(
@@ -1080,12 +1045,12 @@ object Similarity {
     val v2m = v2.toMap
     var dacc = java.math.BigDecimal.ZERO
     v1.foreach { case (j, a) =>
-      v2m.get(j).foreach(b => dacc = dacc.add(t12Local(a * b)))
+      v2m.get(j).foreach(b => dacc = dacc.add(dec12(a * b)))
     }
     val (l1R, l2R, dotR) =
-      (round6Local(lam1), round6Local(lam2), round6Local(dacc.doubleValue))
+      (round6(lam1), round6(lam2), round6(dacc.doubleValue))
     v1.map { case (j, a) =>
-      (j, round6Local(a), round6Local(v2m(j)), l1R, l2R, dotR)
+      (j, round6(a), round6(v2m(j)), l1R, l2R, dotR)
     }.toSeq.toDF("j", "loading1_r", "loading2_r", "lambda1_r",
       "lambda2_r", "dot12_r")
   }
@@ -1100,8 +1065,6 @@ object Similarity {
     * (n, mean_cos_r, mean_abs_cos_r, frac_abs_gt_r at `threshold`). */
   def anisotropyDirection(collection: DataFrame, iters: Int = 8,
       threshold: Double = 0.5): DataFrame = {
-    def t12(c: org.apache.spark.sql.Column) =
-      round(c, 12).cast("decimal(28,12)")
     val sp = collection.sparkSession
     import sp.implicits._
     // v₁ comes from the driver-local eigensolve (same exact doubles the
@@ -1233,8 +1196,6 @@ object Similarity {
     * guard), not a div-by-zero. Returns topK rows: rn, vec_id,
     * score_r (6 dp; ties by vec_id ascending). */
   def mahalanobisDiag(collection: DataFrame, topK: Int): DataFrame = {
-    def t12(c: org.apache.spark.sql.Column) =
-      round(c, 12).cast("decimal(28,12)")
     val x = collection.select(col("vec_id"),
         posexplode(col("embedding").cast("array<double>"))
           .as(Seq("_j", "_x")))
@@ -1325,7 +1286,6 @@ object Similarity {
   def linearCkaBlocks(emb: DataFrame, idCol: String, vecCol: String,
       splitDim: Int): DataFrame = {
     require(splitDim >= 1)
-    def t12(c: Column) = round(c, 12).cast("decimal(28,12)")
     val dims = emb.select(col(idCol).as("_id"),
         posexplode(col(vecCol)).as(Seq("_i", "_v")))
       .select(col("_id"), col("_i"), col("_v").cast("double").as("_v"))
@@ -1379,7 +1339,6 @@ object Similarity {
   def uniformityAlignment(emb: DataFrame, idCol: String,
       vecCol: String, labelCol: String, k: Int = 128): DataFrame = {
     require(k >= 2)
-    def t12(c: Column) = round(c, 12).cast("decimal(28,12)")
     val sample = emb.select(col(idCol).as("_id"),
         col(vecCol).as("_vec"), col(labelCol).as("_lab"),
         md5(col(idCol).cast("string")).as("_ord"))

@@ -3,6 +3,9 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.DriverLocal
+import graft.util.Exact.{dec12, t12}
+
 /** Text-analysis operators for the LLM-data-pipeline surface
   * (SURVEY.md §2.12 / builder north star): normalization, tokenization,
   * token stats, language-ID heuristic, quality scoring, fingerprinting.
@@ -808,7 +811,6 @@ object TextOps {
       .where(col("_ncum") >= 1 && col("_vcum") >= 1)
     val x = log(col("_ncum").cast("double"))
     val y = log(col("_vcum").cast("double"))
-    def t12(c: Column) = round(c, 12).cast("decimal(28,12)")
     val agg = cum.agg(count(lit(1)).as("n_docs"),
       max(col("_ncum")).as("n_tokens"), max(col("_vcum")).as("n_types"),
       sum(t12(x)).cast("double").as("_sx"),
@@ -886,15 +888,13 @@ object TextOps {
         col("_term").as("_dst")))
       .groupBy(col("_src"), col("_dst"))
       .agg(count(lit(1)).as("_w"))
-    val cap = sp.conf.get("spark.graft.driverLocal.textrankEdgeCap",
-      TextrankEdgeCap.toString).toInt
-    // limit(cap + 1) bounds the collect: an over-cap graph costs one
-    // extra row, never a driver OOM, and falls back distributed
-    val eRows = edges.limit(cap + 1).collect()
-    val scored: DataFrame = if (eRows.length <= cap) {
-      textRankLocal(sp, eRows.map(r =>
-        (r.getString(0), r.getString(1), r.getLong(2))), iters, damping)
-    } else textRankDistributed(edges, iters, damping)
+    // an over-cap graph falls back distributed
+    val scored: DataFrame =
+      DriverLocal.collect(edges, DriverLocal.TextrankEdges) match {
+        case Some(eRows) => textRankLocal(sp, eRows.map(r =>
+          (r.getString(0), r.getString(1), r.getLong(2))), iters, damping)
+        case None => textRankDistributed(edges, iters, damping)
+      }
     scored.orderBy(col("_r").desc, col("_term")).limit(topK)
       .select(col("_term").as("term"), round(col("_r"), 9).as("score_r"))
       .withColumn("rn", row_number().over(org.apache.spark.sql
@@ -902,30 +902,16 @@ object TextOps {
       .select(col("rn"), col("term"), col("score_r"))
   }
 
-  /** Default cap on collected TextRank edges for the driver-local
-    * recursion: the co-occurrence graph is vocab-bounded, not
-    * corpus-bounded, but vocab itself grows with data — so unlike the
-    * bradleyTerry item universe this valve has a distributed FALLBACK
-    * rather than a loud failure. Conf-gated via
-    * `spark.graft.driverLocal.textrankEdgeCap`. */
-  val TextrankEdgeCap: Int = 1 << 20
-
   /** Driver-local weighted-PageRank trajectory on the collected edge
     * list — bit-identical to [[textRankDistributed]]: every fan-in term
     * is rounded through the exact Round(12)+Cast(decimal(28,12)) pipeline
-    * Spark codegen executes ([[graft.ops.Choice.bradleyTerry]]'s t12
-    * replay), partial sums are exact decimals (order-independent), and
+    * Spark codegen executes ([[graft.util.Exact.dec12]]), partial sums
+    * are exact decimals (order-independent), and
     * the per-step rank expression is the same left-associated double
     * arithmetic. Returns a |vocab|-row (_term, _r) frame. */
   private def textRankLocal(sp: org.apache.spark.sql.SparkSession,
       es: Array[(String, String, Long)], iters: Int,
       damping: Double): DataFrame = {
-    def t12l(x: Double): java.math.BigDecimal = {
-      val r = java.math.BigDecimal.valueOf(x)
-        .setScale(12, java.math.RoundingMode.HALF_UP).doubleValue()
-      java.math.BigDecimal.valueOf(r)
-        .setScale(12, java.math.RoundingMode.HALF_UP)
-    }
     val outw: Map[String, Long] =
       es.groupBy(_._1).map { case (s0, rs) => s0 -> rs.map(_._3).sum }
     val nD = outw.size.toDouble
@@ -936,7 +922,7 @@ object TextOps {
       r = byDst.map { case (dst, rs) =>
         var acc = java.math.BigDecimal.ZERO
         rs.foreach { case (s0, _, w0) =>
-          acc = acc.add(t12l(prev(s0) * w0.toDouble / outw(s0).toDouble))
+          acc = acc.add(dec12(prev(s0) * w0.toDouble / outw(s0).toDouble))
         }
         dst -> ((1.0 - damping) / nD + damping * acc.doubleValue)
       }
@@ -950,7 +936,6 @@ object TextOps {
     * and hash-aggregates the 12-dp-gridded fan-in terms per target. */
   private def textRankDistributed(edges0: DataFrame, iters: Int,
       damping: Double): DataFrame = {
-    def t12(c: Column) = round(c, 12).cast("decimal(28,12)")
     val edges = edges0.localCheckpoint() // once per iteration + outw
     val outw = edges.groupBy(col("_src"))
       .agg(sum(col("_w")).as("_outw"))
@@ -1040,7 +1025,6 @@ object TextOps {
     * source_a, source_b, n_terms, delta_r. */
   def burrowsDelta(docs: DataFrame, groupCol: String, textCol: String,
       topK: Int): DataFrame = {
-    def t12(c: Column) = round(c, 12).cast("decimal(28,12)")
     val tok = docs.select(col(groupCol).as("_g"),
         explode(tokens(normalize(col(textCol)))).as("_t"))
       .localCheckpoint() // top-K cut + per-source counts read it
@@ -1101,7 +1085,6 @@ object TextOps {
   def naiveBayesLangConfusion(docs: DataFrame, idCol: String,
       textCol: String, langCol: String, buckets: Int,
       gramN: Int = 3): DataFrame = {
-    def t12(c: Column) = round(c, 12).cast("decimal(28,12)")
     // ONE gram/md5 pass, immediately reduced to the (doc, bucket, n)
     // grain and materialized — it feeds both training and apply (the
     // unreduced twin ran the hash pass twice and fanned raw gram
@@ -1372,7 +1355,6 @@ object TextOps {
     require(fracs.nonEmpty)
     val s = docs.sparkSession
     import s.implicits._
-    def t12r(c: Column) = round(c, 12).cast("decimal(28,12)")
     val tc = docs.select(explode(tokens(normalize(col(textCol))))
         .as("_tok"))
       .groupBy(col("_tok")).agg(count(lit(1)).as("_n"))
@@ -1386,7 +1368,7 @@ object TextOps {
       .join(tc.crossJoin(broadcast(tot)).select(col("_tok"), col("_n"),
         col("_bign").as("_bn2")), col("_bign") === col("_bn2"))
       .groupBy(col("frac"), col("m"), col("_v"))
-      .agg(sum(t12r(lit(1.0) - exp(round(col("m").cast("double")
+      .agg(sum(t12(lit(1.0) - exp(round(col("m").cast("double")
           * log(greatest(lit(1.0) - col("_n").cast("double")
             / col("_bign").cast("double"), lit(1e-15))), 12))))
         .cast("double").as("_e"))
@@ -1409,7 +1391,6 @@ object TextOps {
   def mattr(docs: DataFrame, groupCol: String, idCol: String,
       textCol: String, window: Int = 25): DataFrame = {
     require(window >= 2)
-    def t12(c: Column) = round(c, 12).cast("decimal(28,12)")
     val toks = docs.select(col(groupCol), col(idCol),
       posexplode(tokens(normalize(col(textCol)))).as(Seq("_p", "_tok")))
     val withN = toks.join(
@@ -1478,7 +1459,6 @@ object TextOps {
     * hill0, hill1_r, hill2_r, pielou_r. */
   def hillEvenness(docs: DataFrame, groupCol: String, textCol: String)
       : DataFrame = {
-    def t12(c: Column) = round(c, 12).cast("decimal(28,12)")
     val freq = docs
       .select(col(groupCol),
         explode(tokens(normalize(col(textCol)))).as("_tok"))
@@ -1554,7 +1534,6 @@ object TextOps {
   def selfBleuSampled(docs: DataFrame, idCol: String, textCol: String,
       k: Int = 16): DataFrame = {
     require(k >= 2)
-    def t12(c: Column) = round(c, 12).cast("decimal(28,12)")
     val s = docs.sparkSession
     val sample = docs
       .select(col(idCol).as("_id"),

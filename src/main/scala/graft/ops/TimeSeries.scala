@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Exact.t12
+
 /** Regular-grid time-series repair: per-key daily spines with gap rows
   * materialized and values carried forward. Event tables are sparse in
   * time (a user with no events on a day simply has no row); most
@@ -528,8 +530,7 @@ object TimeSeries {
         sum(abs(err)).as("_sae"), sum(err).as("_se"),
         sum(when(col("x") > 0, 1L).otherwise(0L)).as("n_pos"),
         sum(when(col("x") > 0,
-          round(abs(err).cast("double") / col("x"), 12)
-            .cast("decimal(28,12)"))).as("_sape"))
+          t12(abs(err).cast("double") / col("x")))).as("_sape"))
       .select(col(keyCol), col("n_days"),
         round(col("_sae").cast("double") / col("n_days"), 6).as("mae_r"),
         round(col("_se").cast("double") / col("n_days"), 6).as("bias_r"),
@@ -579,12 +580,12 @@ object TimeSeries {
       .join(broadcast(weights), Seq("period", "r"))
     joined.groupBy(col(keyCol), col("period"))
       .agg(count(lit(1)).as("n_days"), sum(col("x")).as("_sx"),
-        sum(round(col("x") * col("c"), 12).cast("decimal(28,12)"))
+        sum(t12(col("x") * col("c")))
           .as("_sc"),
-        sum(round(col("x") * col("sn"), 12).cast("decimal(28,12)"))
+        sum(t12(col("x") * col("sn")))
           .as("_ss"),
-        sum(round(col("c"), 12).cast("decimal(28,12)")).as("_wc"),
-        sum(round(col("sn"), 12).cast("decimal(28,12)")).as("_ws"))
+        sum(t12(col("c"))).as("_wc"),
+        sum(t12(col("sn"))).as("_ws"))
       .select(col(keyCol), col("period"), col("n_days"),
         round(
           (col("_sc").cast("double") - col("_sx").cast("double")
@@ -722,10 +723,10 @@ object TimeSeries {
     val seas = det
       .groupBy((dayofweek(col(dayCol)) - 1).cast("long").as("dow"))
       .agg(count(lit(1)).as("n_days"),
-        (sum(round(col("_det"), 12).cast("decimal(28,12)"))
+        (sum(t12(col("_det")))
           .cast("double") / count(lit(1))).as("_sraw"))
     val m = seas.agg(
-      (sum(round(col("_sraw"), 12).cast("decimal(28,12)"))
+      (sum(t12(col("_sraw")))
         .cast("double") / count(lit(1))).as("_sm"))
     val snorm = seas.crossJoin(broadcast(m))
       .select(col("dow"), col("n_days"), col("_sraw"),
@@ -831,7 +832,6 @@ object TimeSeries {
   def hurstRs(daily: DataFrame, tCol: String, yCol: String,
       sizes: Seq[Int]): DataFrame = {
     require(sizes.nonEmpty && sizes.forall(_ >= 2), "block sizes >= 2")
-    def t12(c: Column) = round(c, 12).cast("decimal(28,12)")
     val s = daily.sparkSession
     import s.implicits._
     val spec = sizes.toDF("n")
@@ -1052,8 +1052,6 @@ object TimeSeries {
     * laspeyres_r, paasche_r, fisher_r. */
   def priceIndexFisher(sales: DataFrame, itemCol: String,
       monthCol: String, centsCol: String, qtyCol: String): DataFrame = {
-    def t12(c: org.apache.spark.sql.Column) =
-      round(c, 12).cast("decimal(28,12)")
     val pm = sales.groupBy(col(itemCol).as("_i"), col(monthCol).as("_m"))
       .agg(sum(col(centsCol)).as("_c"), sum(col(qtyCol)).as("_q"))
       .withColumn("_p", col("_c").cast("double") / col("_q").cast("double"))
@@ -1172,7 +1170,6 @@ object TimeSeries {
     require(periods.nonEmpty && periods.forall(_ >= 2))
     val s = df.sparkSession
     import s.implicits._
-    def t12(c: Column) = round(c, 12).cast("decimal(28,12)")
     val d0 = df.agg(min(col(dayCol)).as("_d0"))
     val base = df.crossJoin(broadcast(d0))
       .select(datediff(col(dayCol), col("_d0")).as("t"),
@@ -1225,7 +1222,6 @@ object TimeSeries {
     * r2_r (nulls when < 3 usable cells or degenerate spread). */
   def taylorLaw(events: DataFrame, keyCol: String, tsCol: String)
       : DataFrame = {
-    def t12(c: Column) = round(c, 12).cast("decimal(28,12)")
     val daily = events
       .groupBy(col(keyCol), to_date(col(tsCol)).as("day"))
       .agg(count(lit(1)).as("x"))
@@ -1324,7 +1320,6 @@ object TimeSeries {
     * n_periods, flatness_r, peak_period, peak_power_r. */
   def spectralFlatness(events: DataFrame, tsCol: String,
       periods: Seq[Int]): DataFrame = {
-    def t12(c: Column) = round(c, 12).cast("decimal(28,12)")
     val p = spectralPower(events.withColumn("_k", lit(0)), "_k",
       tsCol, periods).localCheckpoint()
     val agg = p.agg(count(lit(1)).as("n_periods"),

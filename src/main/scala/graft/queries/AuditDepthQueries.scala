@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.{Dedup, TextOps}
 import graft.util.Tables._
+import graft.util.Exact.t12
 
 /** Round-9 pipeline-audit depth: is the dedup deleting the good stuff
   * (kept-vs-removed quality audit over the q61 LSH chain), tokenizer
@@ -151,7 +152,7 @@ object AuditDepthQueries {
             " (a, y) -> a + y * y))").as("nrm"))
         .groupBy(col("label"))
         .agg(count(lit(1)).as("n"),
-          round(sum(round(col("nrm"), 12).cast("decimal(28,12)"))
+          round(sum(t12(col("nrm")))
             .cast("double") / count(lit(1)), 6).as("mean_norm_r"),
           round(min(col("nrm")), 6).as("min_norm_r"),
           round(max(col("nrm")), 6).as("max_norm_r"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.{Profile, Ranks, Retrieval, Similarity, TimeSeries}
 import graft.util.Tables._
+import graft.util.Exact.t12
 
 /** Evaluation-metrics batch: the offline readouts that gate a model,
   * index, or heuristic change — retrieval quality (hits/MRR/nDCG),
@@ -226,9 +227,8 @@ object EvalQueries {
         acf.withColumn("_n", col("n_pairs") + col("lag"))
           .groupBy(col("event_type"))
           .agg(max(col("_n")).as("n"), count(lit(1)).as("m_lags"),
-            sum(round(col("acf_r") * col("acf_r")
-              / col("n_pairs").cast("double"), 12)
-              .cast("decimal(28,12)")).as("_t12"))
+            sum(t12(col("acf_r") * col("acf_r")
+              / col("n_pairs").cast("double"))).as("_t12"))
           .select(col("event_type"), col("n"), col("m_lags"),
             round(col("n").cast("double")
               * (col("n").cast("double") + lit(2.0))

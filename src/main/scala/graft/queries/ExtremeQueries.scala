@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
+import graft.util.Exact.t12
 
 /** Extreme-value batch: Gumbel fit on monthly block maxima of daily
   * revenue (method of moments — the capacity-planning "how bad can a
@@ -121,8 +122,7 @@ object ExtremeQueries {
             when(col("_pm").isNull || col("y") > col("_pm"), 1L)
               .otherwise(0L))
           .agg(count(lit(1)).as("n_days"), sum(col("rec")).as("n_records"),
-            round(sum(round(lit(1.0) / col("rn"), 12)
-              .cast("decimal(28,12)")).cast("double"), 6)
+            round(sum(t12(lit(1.0) / col("rn"))).cast("double"), 6)
               .as("expected_records_r"),
             max(when(col("rec") === 1, col("day")))
               .as("last_record_day"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.TimeSeries
 import graft.util.Tables._
+import graft.util.Exact.t12
 
 /** Seasonality & robust monitoring over the daily event grid: weekday
   * seasonal indexes (plain and trend-adjusted) and rolling-MAD anomaly
@@ -397,9 +398,8 @@ object SeasonalQueries {
         val cD = col("c").cast("double")
         val e = rD * cD / col("n").cast("double")
         val x = grid.crossJoin(broadcast(nn))
-          .agg(sum(round((col("o").cast("double") - e)
-            * (col("o").cast("double") - e) / e, 12)
-            .cast("decimal(28,12)")).as("chi12"),
+          .agg(sum(t12((col("o").cast("double") - e)
+            * (col("o").cast("double") - e) / e)).as("chi12"),
             count(lit(1)).as("n_cells"))
         x.crossJoin(broadcast(nn)).crossJoin(broadcast(rc))
           .crossJoin(broadcast(cc))

@@ -4,6 +4,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.util.Tables._
+import graft.util.Exact.t12
 
 /** Experimentation-depth batch: heterogeneous treatment effects by
   * activity decile (the uplift table behind "who does the treatment
@@ -129,13 +130,13 @@ object UpliftQueries {
             log(col("l_quantity")).as("y"))
         val a = v.groupBy(col("l_returnflag")).agg(
           count(lit(1)).as("n"),
-          sum(round(col("x"), 12).cast("decimal(28,12)"))
+          sum(t12(col("x")))
             .cast("double").as("sx"),
-          sum(round(col("y"), 12).cast("decimal(28,12)"))
+          sum(t12(col("y")))
             .cast("double").as("sy"),
-          sum(round(col("x") * col("y"), 12).cast("decimal(28,12)"))
+          sum(t12(col("x") * col("y")))
             .cast("double").as("sxy"),
-          sum(round(col("x") * col("x"), 12).cast("decimal(28,12)"))
+          sum(t12(col("x") * col("x")))
             .cast("double").as("sxx"))
         a.select(col("l_returnflag"), col("n"),
           round(when(col("n") * col("sxx") - col("sx") * col("sx") > 0,

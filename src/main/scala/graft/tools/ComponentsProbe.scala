@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.util.LocalSession
 
 /** Measures the dedup connected-components step on BOTH physical paths
   * — the single-task union-find fast path and the distributed min-label
@@ -29,15 +29,7 @@ object ComponentsProbe {
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(Seq("q61_neardup_removals", "q81_simhash_removals",
         "q108_cluster_histogram", "q328_dedup_quality_audit"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.read.parquet(s"$sfDir/documents.parquet").count() // warmup
     for (gate <- Seq((1L << 20).toString, "0")) {
       spark.conf.set("spark.graft.dedup.unionFindMaxEdges", gate)

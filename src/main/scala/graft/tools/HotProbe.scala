@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.util.LocalSession
 
 /** Scratch stage timing for the round-14 hot list (q430/q424/q215/q534/
   * q379/q81): times each pipeline stage twice in one JVM so the steady
@@ -10,13 +11,7 @@ import org.apache.spark.sql.functions._
 object HotProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(32, logLevel = "ERROR")
     import graft.ops.{Curation, Dedup, Fit, TextOps}
     import graft.util.Tables._
     def time(label: String)(body: => Unit): Unit = {

@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.util.LocalSession
 
 /** Scratch per-stage timing for the r13→r14 mover adjudication
   * (q262/q338/q133/q148): times each pipeline stage of q262 twice in
@@ -10,13 +11,7 @@ import org.apache.spark.sql.functions._
 object MoverProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(32, logLevel = "ERROR")
     import graft.ops.Dedup
     import graft.util.Tables._
     def time(label: String)(body: => Long): Unit = {

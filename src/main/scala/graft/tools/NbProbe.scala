@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.util.Exact.t12
+import graft.util.LocalSession
 
 /** Stage timing for the r15 q430 pipeline (row-local bucket counts):
   * isolates the gram-hash kernel, the bucket-count explode, the
@@ -10,13 +12,7 @@ import org.apache.spark.sql.functions._
 object NbProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(32, logLevel = "ERROR")
     import graft.ops.TextOps
     import graft.util.Tables._
     def time(label: String)(body: => Unit): Unit = {
@@ -48,8 +44,6 @@ object NbProbe {
         .agg(sum(col("_n")).as("_c"))
       time("class counts agg (noop)")(noop(counts))
       // scoring sub-stages on the checkpointed docBuckets
-      def t12(c: org.apache.spark.sql.Column) =
-        round(c, 12).cast("decimal(28,12)")
       val tot = counts.groupBy(col("_lang")).agg(sum(col("_c")).as("_tot"))
       val prior = docs.groupBy(col("lang").as("_lang"))
         .agg(count(lit(1)).as("_ndl"))

@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.util.LocalSession
 
 /** Stage decomposition of the simhash near-dup pipeline (q80/q81):
   * banding, valve, self-join, verify, components. Not part of the
@@ -9,13 +10,7 @@ import org.apache.spark.sql.functions._
 object SimhashProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(32, logLevel = "ERROR")
     import graft.ops.Dedup
     import graft.util.Tables._
     def time(label: String)(body: => Unit): Unit = {

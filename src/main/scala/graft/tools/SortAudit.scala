@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical._
+
+import graft.util.LocalSession
 
 /** Scratch audit of the Verify row-order invariant: every query whose
   * result can exceed one row must end in a global Sort (check_oracle's
@@ -19,13 +20,7 @@ object SortAudit {
     case _ => false
   }
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(4, logLevel = "ERROR")
     graft.queries.Registry.all.foreach { q =>
       try {
         val df = q.fn(spark, "/root/testdata/sf0.001")

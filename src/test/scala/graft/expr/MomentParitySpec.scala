@@ -49,6 +49,8 @@ class MomentParitySpec extends SparkTestBase {
       null,
       Seq[java.lang.Float](0.5f, null, 4f),  // null element: its cells null out
       Seq[java.lang.Float](2f),              // ragged: smaller dim
+      // NaN / infinite products cast to null terms, which sum skips
+      Seq[java.lang.Float](Float.NaN, 1f, Float.PositiveInfinity),
       // big in-contract products (1e12 — inside decimal(28,12)'s 16
       // integer digits; the t12 cast contract assumes this, and the
       // kernel's long accumulator must spill to BigInteger here)
